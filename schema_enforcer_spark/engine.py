@@ -56,10 +56,10 @@ _VIOLATION_SCHEMA_DDL = (
 class ValidationReport:
     violations: DataFrame   # one row per (instance, rule, offending value)
     verdicts: DataFrame     # one row per instance: PASS/FAIL + n_violations
-    # the frame actually persisted, when it differs from `violations` —
-    # validate_many persists the manifest-tagged union and returns a
-    # projection of it; unpersisting the projection would NOT release the
-    # parent cache (Dataset.unpersist is per-plan, not per-lineage)
+    # the frame actually persisted: validate_many persists the
+    # manifest-tagged union and `violations` is a projection of it;
+    # unpersisting the projection would NOT release the parent cache
+    # (Dataset.unpersist is per-plan, not per-lineage)
     cached: DataFrame | None = None
 
     def passes(self) -> bool:
@@ -68,15 +68,14 @@ class ValidationReport:
         return self.violations.limit(1).count() == 0
 
     def unpersist(self) -> None:
-        """Release the cached violations (validate() persists them so the
-        verdict aggregation doesn't recompute every rule)."""
-        for frame in (self.violations, self.cached):
-            if frame is None:
-                continue
-            try:
-                frame.unpersist()
-            except Exception:  # noqa: BLE001 - not cached / session gone
-                pass
+        """Release the cached violations (validate_many persists them so
+        the verdict aggregation doesn't recompute every rule)."""
+        if self.cached is None:
+            return
+        try:
+            self.cached.unpersist()
+        except Exception:  # noqa: BLE001 - session gone
+            pass
 
     def rule_summary(self) -> DataFrame:
         """Per-rule observability: (schema_id, n_violations, n_instances) —
@@ -180,13 +179,6 @@ class ValidationEngine:
         # stored drift baselines (rule id → compute_histogram dict) — the
         # --write-baseline/--baseline lifecycle; inline rule baselines win
         self.drift_baselines = drift_baselines or {}
-        # prepared-plan memo for _row_violation_array, keyed by input
-        # DataFrame identity (see that method); (df, column) pairs — the df
-        # reference pins the id() against reuse after GC
-        self._row_arr_memo: dict[int, tuple[DataFrame, Column | None]] = {}
-        # prepared-plan memo for violations()/verdicts() construction (see
-        # violations() — lazy-plan manifests only, never eager rule kinds)
-        self._plan_memo: dict[tuple, tuple] = {}
 
     # -- helpers -----------------------------------------------------------
 
@@ -200,13 +192,18 @@ class ValidationEngine:
             return F.pmod(F.hash(F.col(anchor)), F.lit(self.num_buckets)).cast("string")
         return F.lit("0")
 
-    def _path(self, df: DataFrame, leaf: str | None) -> Column:
-        elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
-        if leaf:
-            # a dotted path is a struct traversal: one path element per level
-            elems.extend(F.lit(p) for p in leaf.split("."))
+    def _key_path(self, df: DataFrame) -> list[Column]:
+        """The ``absolute_path`` prefix: the key columns present in ``df``.
+        Build it once per plan and hand it to :meth:`_path` for each rule —
+        every ``F.col().cast()`` is a driver↔JVM round trip."""
         # Number→string coercion is required for violation-row parity
         # (coerce_numbers_to_str, /root/reference/schema_enforcer/validation.py:19).
+        return [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+
+    @staticmethod
+    def _path(key_path: list[Column], leaf: str | None) -> Column:
+        # a dotted path is a struct traversal: one path element per level
+        elems = [*key_path, *(F.lit(p) for p in leaf.split("."))] if leaf else key_path
         return F.array(*elems) if elems else F.array().cast("array<string>")
 
     def _wrap(self, df: DataFrame, schema_id: Column, path: Column, failing_value: Column, message: Column) -> list[Column]:
@@ -315,7 +312,7 @@ class ValidationEngine:
             label = (field or col_name).split(".")[-1]
             rid = rule.get("id") or f"{self.manifest.id}/items/{col_name}" + (f"/{field}" if field else "")
             custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+            key_elems = self._key_path(df)
 
             # Spark HOF lambdas must take exactly the declared arity with no
             # extra/default parameters — capture rule context via a factory
@@ -388,7 +385,7 @@ class ValidationEngine:
             add = rule.get("additional_items")
             rid = rule.get("id") or f"{self.manifest.id}/prefix_items/{col_name}"
             custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+            key_elems = self._key_path(df)
             col = F.col(col_name)
             n = len(checks)
             label = col_name.split(".")[-1]
@@ -504,7 +501,7 @@ class ValidationEngine:
             label = (field or col_name).split(".")[-1]
             rid = rule.get("id") or f"{self.manifest.id}/pattern_properties/{col_name}"
             custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+            key_elems = self._key_path(df)
 
             def make_viol(_field, _check, _label, _rid, _cm, _tdt, _col, _keys, _rule, _pat, _rej):
                 def viol(e):
@@ -603,7 +600,7 @@ class ValidationEngine:
             check = rule.params["check"]
             rid = rule.get("id") or f"{self.manifest.id}/property_names/{col_name}"
             custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+            key_elems = self._key_path(df)
 
             def make_viol(_check, _rid, _cm, _col, _keys, _rule):
                 def viol(k):
@@ -652,24 +649,7 @@ class ValidationEngine:
         column — the single-pass building block shared by
         :meth:`row_violations` (single manifest) and :func:`validate_many`
         (multi-manifest fused scan). None when the manifest has no row
-        rules.
-
-        The built Column is memoized per input-DataFrame identity:
-        assembling it costs hundreds of driver↔JVM round trips (~0.2-0.3 s
-        for a 10-20-rule manifest — measured r7, a third of the whole
-        validate() wall time on a warm 2.3M-row input) and depends only on
-        the manifest and the input's schema, so re-validating the same
-        DataFrame (multiple report consumers, repeated CLI tables, bench
-        trials) shouldn't rebuild it. This is plan PREPARATION reuse only —
-        the expression is lazy, so every action still computes from the
-        input; no data or results are cached. Keyed by id(df) with the df
-        pinned in the entry (never by schema alone: compiled pieces may
-        hold df-bound attribute references, which don't transfer to a
-        different DataFrame of the same shape)."""
-        memo_key = id(df)
-        hit = self._row_arr_memo.get(memo_key)
-        if hit is not None and hit[0] is df:
-            return hit[1]
+        rules."""
         compiled = compile_row_rules(df, self.manifest) + self._compile_conditionals(df)
         item_arrays = (
             self._items_violation_arrays(df)
@@ -678,26 +658,22 @@ class ValidationEngine:
             + self._property_names_violation_arrays(df)
         )
         if not compiled and not item_arrays:
-            combined = None
-        else:
-            structs = [
-                F.when(
-                    ~F.coalesce(cr.predicate, F.lit(True)),
-                    F.struct(
-                        F.lit(cr.rule_id).alias("schema_id"),
-                        self._path(df, cr.column).alias("absolute_path"),
-                        cr.failing_value.alias("failing_value"),
-                        cr.message.alias("message"),
-                    ),
-                )
-                for cr in compiled
-            ]
-            arrays = ([F.array_compact(F.array(*structs))] if structs else []) + item_arrays
-            combined = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-        if len(self._row_arr_memo) >= 8:  # bounded: drop the oldest entry
-            self._row_arr_memo.pop(next(iter(self._row_arr_memo)))
-        self._row_arr_memo[memo_key] = (df, combined)
-        return combined
+            return None
+        key_path = self._key_path(df)
+        structs = [
+            F.when(
+                ~F.coalesce(cr.predicate, F.lit(True)),
+                F.struct(
+                    F.lit(cr.rule_id).alias("schema_id"),
+                    self._path(key_path, cr.column).alias("absolute_path"),
+                    cr.failing_value.alias("failing_value"),
+                    cr.message.alias("message"),
+                ),
+            )
+            for cr in compiled
+        ]
+        arrays = ([F.array_compact(F.array(*structs))] if structs else []) + item_arrays
+        return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
 
     def row_violations(self, df: DataFrame) -> DataFrame | None:
         combined = self._row_violation_array(df)
@@ -1353,7 +1329,7 @@ class ValidationEngine:
             self._instance_col(df).alias("instance_name"),
             F.lit(self.manifest.table).alias("instance_location"),
             F.lit(self.instance_type).alias("instance_type"),
-            self._path(df, col).alias("absolute_path"),
+            self._path(self._key_path(df), col).alias("absolute_path"),
             _dec(c).alias("failing_value"),
             message.alias("message"),
         )
@@ -1486,6 +1462,7 @@ class ValidationEngine:
                                      *[o for r in rules if r.kind in ("ordering", "sequence") for o in r.params["order_by"] if o in df.columns]]))
         base = df.select(*needed, self._instance_col(df).alias("instance_name"), *aux)
 
+        key_path = self._key_path(base)
         structs = []
         for i, (rule, kind, col_name, aux_name, extra) in enumerate(specs):
             if kind == "unique":
@@ -1604,7 +1581,7 @@ class ValidationEngine:
                     F.coalesce(bad, F.lit(False)),
                     F.struct(
                         F.lit(rid).alias("schema_id"),
-                        self._path(base, col_name).alias("absolute_path"),
+                        self._path(key_path, col_name).alias("absolute_path"),
                         col.cast("string").alias("failing_value"),
                         msg.alias("message"),
                     ),
@@ -1752,58 +1729,22 @@ class ValidationEngine:
 
     # -- orchestration -----------------------------------------------------
 
-    # Rule kinds whose violation DataFrames are built EAGERLY (they run
-    # Spark jobs during construction: equals_table's hash precompare
-    # localCheckpoints digests, drift collects the current histogram) —
-    # memoizing their construction would reuse computed DATA across calls,
-    # not just a plan, so the prepared-plan memo below must skip them.
-    _EAGER_RULE_KINDS = frozenset({"equals_table", "drift"})
+    def violations(self, df: DataFrame, ref_tables: dict[str, DataFrame] | None = None) -> DataFrame:
+        """Assemble the full violations frame: the row-rule projection plus
+        every table-grain rule."""
+        parts = self._table_violations(df, ref_tables or {})
+        if (rv := self.row_violations(df)) is not None:
+            parts.insert(0, rv)
+        if not parts:
+            return df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL)
+        return reduce(lambda a, b: a.unionByName(b), parts)
 
-    def violations(
-        self,
-        df: DataFrame,
-        ref_tables: dict[str, DataFrame] | None = None,
-        include_row_rules: bool = True,
-    ) -> DataFrame:
-        """Assemble the full violations frame. Construction is memoized per
-        (input identity, ref-table identities, include_row_rules) when every
-        rule builds lazily — assembling 15+ rule plans costs ~0.3-0.5 s of
-        driver↔JVM round trips (measured r7) and repeat consumers (bench
-        trials, report + quarantine over one input) shouldn't pay it twice.
-        Plan preparation only: actions on the returned frame always
-        recompute from the input; manifests with any eager rule kind
-        (equals_table, drift) are never memoized."""
-        ref_tables = ref_tables or {}
-        memo_key = None
-        if not any(r.kind in self._EAGER_RULE_KINDS for r in self.manifest.table_rules):
-            memo_key = (
-                id(df),
-                tuple(sorted((k, id(v)) for k, v in ref_tables.items())),
-                include_row_rules,
-            )
-            hit = self._plan_memo.get(memo_key)
-            # the pinned refs guard id() reuse after GC, like _row_arr_memo
-            if hit is not None and hit[0] is df and all(a is b for a, b in zip(hit[1], ref_tables.values())):
-                return hit[2]
-        out = self._violations_impl(df, ref_tables, include_row_rules)
-        if memo_key is not None:
-            if len(self._plan_memo) >= 8:
-                self._plan_memo.pop(next(iter(self._plan_memo)))
-            self._plan_memo[memo_key] = (df, tuple(ref_tables.values()), out)
-        return out
-
-    def _violations_impl(
-        self,
-        df: DataFrame,
-        ref_tables: dict[str, DataFrame],
-        include_row_rules: bool,
-    ) -> DataFrame:
+    def _table_violations(self, df: DataFrame, ref_tables: dict[str, DataFrame]) -> list[DataFrame]:
+        """One violations frame per table-grain rule group (strict columns,
+        fused window groups, joins, aggregates). Row rules are not here:
+        :meth:`violations` adds this manifest's row projection, and
+        :func:`validate_many` fuses every manifest's row rules into one."""
         parts: list[DataFrame] = []
-        # include_row_rules=False: validate_many computes every engine's row
-        # rules in ONE fused projection over a single scan; only table-grain
-        # rules (their own exchanges anyway) stay per-engine here
-        if include_row_rules and (rv := self.row_violations(df)) is not None:
-            parts.append(rv)
         strict_rules: list[Rule | None] = [r for r in self.manifest.table_rules if r.kind == "strict_columns"]
         if self.manifest.strict and not strict_rules:
             strict_rules = [None]
@@ -1862,25 +1803,9 @@ class ValidationEngine:
                 # validate NOTHING and report PASS — fail loudly instead
                 # (this exact hole shipped for 'sequence' in round 2)
                 raise NotImplementedError(f"table rule kind {rule.kind!r} has no evaluator")
-        if not parts:
-            return df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL)
-        return reduce(lambda a, b: a.unionByName(b), parts)
+        return parts
 
     def verdicts(self, df: DataFrame, violations: DataFrame) -> DataFrame:
-        # construction-only memo, same contract as violations(): the verdict
-        # plan is always lazy, so keying on the exact (df, violations) pair
-        # of inputs reuses pure plan assembly and nothing else
-        memo_key = ("verdicts", id(df), id(violations))
-        hit = self._plan_memo.get(memo_key)
-        if hit is not None and hit[0] is df and hit[1] is violations:
-            return hit[2]
-        out = self._verdicts_impl(df, violations)
-        if len(self._plan_memo) >= 8:
-            self._plan_memo.pop(next(iter(self._plan_memo)))
-        self._plan_memo[memo_key] = (df, violations, out)
-        return out
-
-    def _verdicts_impl(self, df: DataFrame, violations: DataFrame) -> DataFrame:
         # The universe is every data partition PLUS any instance name that
         # appears only in violations — table-grain rules (strict_columns,
         # drift) attribute to instance 'table', which no data row carries; a
@@ -1932,16 +1857,8 @@ class ValidationEngine:
         ref_tables: dict[str, DataFrame] | None = None,
         cache_violations: bool = True,
     ) -> ValidationReport:
-        """Full report. Violations feed BOTH the violations output and the
-        verdict aggregation; without persistence Spark would recompute every
-        rule for each consumer — persist by default (violation sets are
-        tiny relative to input; spill-safe MEMORY_AND_DISK)."""
-        violations = self.violations(df, ref_tables)
-        if cache_violations:
-            from pyspark.storagelevel import StorageLevel
-
-            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-        return ValidationReport(violations=violations, verdicts=self.verdicts(df, violations))
+        """Full report: :func:`validate_many` over this one engine."""
+        return validate_many([self], df, ref_tables, cache_violations)
 
 
 def _tag_element(inst: Column, mid: str, loc: str, itype: str):
@@ -1968,16 +1885,16 @@ def validate_many(
     ref_tables: dict[str, DataFrame] | None = None,
     cache_violations: bool = True,
 ) -> ValidationReport:
-    """Validate one input against MANY manifests in ONE scan for all row
-    rules.
+    """Validate one input against one or MANY manifests in ONE scan for all
+    row rules — :meth:`ValidationEngine.validate` is this over one engine.
 
-    The per-engine path (``[e.validate(df) for e in engines]``) scans the
-    input once per manifest — at 100 TB with M bound manifests that is M
-    full-table reads for work that is all row-local. Here every engine
-    contributes its combined row-violation array
-    (:meth:`ValidationEngine._row_violation_array`) to a SINGLE projection;
-    one ``explode`` over the concatenated (manifest-tagged) arrays emits
-    every manifest's violation rows from one pass — the same fusion the
+    Validating each manifest on its own scans the input once per manifest
+    — at 100 TB with M bound manifests that is M full-table reads for work
+    that is all row-local. Here every engine contributes its combined
+    row-violation array (:meth:`ValidationEngine._row_violation_array`) to a
+    SINGLE projection; one ``explode`` over the concatenated
+    (manifest-tagged) arrays emits every manifest's violation rows from one
+    pass — the same fusion the
     CLI's ``--quarantine`` flag already uses for its validity flag
     (``row_fail_count`` summed across engines). Table-grain rules
     (unique/window/aggregate/referential/drift) keep their own per-engine
@@ -1987,8 +1904,11 @@ def validate_many(
     Verdicts stay per-manifest: the fused violations are persisted once and
     split by the internal ``_mid`` manifest tag (rule ids alone can't
     attribute a violation — a rule may carry a user-supplied id that doesn't
-    embed the manifest id). The returned report's ``cached`` handle is the
-    tagged parent frame; ``unpersist()`` releases it.
+    embed the manifest id). Persisting by default keeps the verdict
+    aggregation from recomputing every rule (violation sets are tiny
+    relative to the input; spill-safe MEMORY_AND_DISK). The returned
+    report's ``cached`` handle is the tagged parent frame; ``unpersist()``
+    releases it.
 
     Reference analogue: one data file is validated against every matching
     schema in a single pass over the file's contents
@@ -1996,89 +1916,56 @@ def validate_many(
     ``schema.validate`` per matched schema over the same loaded content).
     """
     ref_tables = ref_tables or {}
+    parts: list[DataFrame] = []
     if len(engines) == 1:
-        return engines[0].validate(df, ref_tables, cache_violations=cache_violations)
-    # Construction memo, same contract as ValidationEngine.violations():
-    # assembling the fused multi-manifest plan costs ~0.3 s of driver↔JVM
-    # round trips; everything below is lazy plan building when no engine
-    # carries an eager rule kind, so repeat calls over the same inputs
-    # (bench trials, report consumers) reuse the prepared (all_v, verdicts)
-    # pair — persist/unpersist still happens per call, actions recompute.
-    memo_host = engines[0]._plan_memo if engines else None
-    memo_key = None
-    if memo_host is not None and not any(
-        r.kind in ValidationEngine._EAGER_RULE_KINDS for e in engines for r in e.manifest.table_rules
-    ):
-        memo_key = (
-            "validate_many",
-            tuple(id(e) for e in engines),
-            id(df),
-            tuple(sorted((k, id(v)) for k, v in ref_tables.items())),
-        )
-        hit = memo_host.get(memo_key)
-        if (
-            hit is not None
-            and hit[0] is df
-            and all(a is b for a, b in zip(hit[1], engines))
-            and len(hit[1]) == len(engines)
-        ):
-            all_v, verdicts = hit[2], hit[3]
-            if cache_violations:
-                from pyspark.storagelevel import StorageLevel
-
-                all_v = all_v.persist(StorageLevel.MEMORY_AND_DISK)
-            return ValidationReport(
-                violations=all_v.drop("_mid"),
-                verdicts=verdicts,
-                cached=all_v if cache_violations else None,
-            )
-    tagged: list[Column] = []
-    for e in engines:
-        arr = e._row_violation_array(df)
-        if arr is not None:
-            tagged.append(
-                F.transform(
-                    arr,
-                    _tag_element(
-                        e._instance_col(df), e.manifest.id, e.manifest.table, e.instance_type
-                    ),
+        # one manifest needs no per-element tagging: the tagging transform
+        # is a codegen-fallback HOF, so the whole violation array under it
+        # would be evaluated interpreted instead of whole-stage compiled
+        e = engines[0]
+        if (rv := e.row_violations(df)) is not None:
+            parts.append(rv.withColumn("_mid", F.lit(e.manifest.id)))
+    else:
+        tagged: list[Column] = []
+        for e in engines:
+            arr = e._row_violation_array(df)
+            if arr is not None:
+                tagged.append(
+                    F.transform(
+                        arr,
+                        _tag_element(
+                            e._instance_col(df), e.manifest.id, e.manifest.table, e.instance_type
+                        ),
+                    )
+                )
+        if tagged:
+            combined = tagged[0] if len(tagged) == 1 else F.concat(*tagged)
+            parts.append(
+                df.select(combined.alias("_v"))
+                # explode_outer + null filter, not explode: same
+                # InferFiltersFromGenerate duplicate-evaluation defense as
+                # row_violations — the inferred size() filter would push below
+                # the projection and re-run every manifest's full violation
+                # array a second time per row. _v is never NULL, so the result
+                # multiset is unchanged.
+                .select(F.explode_outer("_v").alias("v"))
+                .filter(F.col("v").isNotNull())
+                .select(
+                    F.col("v.schema_id").alias("schema_id"),
+                    F.lit("FAIL").alias("result"),
+                    F.col("v.instance_name").alias("instance_name"),
+                    F.col("v.instance_location").alias("instance_location"),
+                    F.col("v.instance_type").alias("instance_type"),
+                    F.col("v.absolute_path").alias("absolute_path"),
+                    F.col("v.failing_value").alias("failing_value"),
+                    F.col("v.message").alias("message"),
+                    F.col("v._mid").alias("_mid"),
                 )
             )
-    parts: list[DataFrame] = []
-    if tagged:
-        combined = tagged[0] if len(tagged) == 1 else F.concat(*tagged)
-        parts.append(
-            df.select(combined.alias("_v"))
-            # explode_outer + null filter, not explode: same
-            # InferFiltersFromGenerate duplicate-evaluation defense as
-            # row_violations — the inferred size() filter would push below
-            # the projection and re-run every manifest's full violation
-            # array a second time per row. _v is never NULL, so the result
-            # multiset is unchanged.
-            .select(F.explode_outer("_v").alias("v"))
-            .filter(F.col("v").isNotNull())
-            .select(
-                F.col("v.schema_id").alias("schema_id"),
-                F.lit("FAIL").alias("result"),
-                F.col("v.instance_name").alias("instance_name"),
-                F.col("v.instance_location").alias("instance_location"),
-                F.col("v.instance_type").alias("instance_type"),
-                F.col("v.absolute_path").alias("absolute_path"),
-                F.col("v.failing_value").alias("failing_value"),
-                F.col("v.message").alias("message"),
-                F.col("v._mid").alias("_mid"),
-            )
-        )
     for e in engines:
-        # row-rule-only manifests contribute nothing here — skipping them
-        # keeps empty-relation unions out of the fused plan
-        if not e.manifest.table_rules and not e.manifest.strict:
-            continue
-        parts.append(
-            e.violations(df, ref_tables, include_row_rules=False).withColumn(
-                "_mid", F.lit(e.manifest.id)
+        if table_parts := e._table_violations(df, ref_tables):
+            parts.append(
+                reduce(lambda a, b: a.unionByName(b), table_parts).withColumn("_mid", F.lit(e.manifest.id))
             )
-        )
     if not parts:
         parts.append(
             df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL).withColumn(
@@ -2097,10 +1984,6 @@ def validate_many(
             for e in engines
         ],
     )
-    if memo_key is not None:
-        if len(memo_host) >= 8:
-            memo_host.pop(next(iter(memo_host)))
-        memo_host[memo_key] = (df, tuple(engines), all_v, verdicts)
     return ValidationReport(
         violations=all_v.drop("_mid"),
         verdicts=verdicts,

@@ -670,9 +670,50 @@ def test_cli_equals_table_via_ref_table(spark, data, tmp_path, capsys):
     assert rc == 0
 
 
+def test_cli_manifest_dir_caches_violations_once(spark, data, tmp_path, monkeypatch, capsys):
+    """A multi-manifest CLI run caches the engine's tagged violation set and
+    the verdicts, nothing else — persisting report.violations too (a
+    projection of the cached frame) would cache the violations twice — and
+    releases every cache before main() returns."""
+    import shutil
+
+    from schema_enforcer_spark.engine import ValidationReport
+
+    mdir = tmp_path / "mdir"
+    mdir.mkdir()
+    shutil.copy(MANIFEST, mdir / "base.yml")
+    (mdir / "roles_only.yml").write_text(
+        "id: schemas/roles_only\ntable: transcripts\nrules:\n  - kind: required\n    column: role\n"
+    )
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_ids() -> set[int]:
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    # only caches this run adds count: earlier tests' leftovers may be
+    # garbage-collected at any time by Spark's ContextCleaner
+    before = cached_ids()
+    seen: list[int] = []
+    rule_summary = ValidationReport.rule_summary
+
+    def counting_rule_summary(self):
+        seen.append(len(cached_ids() - before))
+        return rule_summary(self)
+
+    monkeypatch.setattr(ValidationReport, "rule_summary", counting_rule_summary)
+    # --output materializes both caches (sink writes) before the summary
+    rc = main(["--manifest", str(mdir), "--input", data["bad"], "--summary",
+               "--output", str(tmp_path / "out")])
+    assert rc == 1
+    assert "validating against 2 manifest(s)" in capsys.readouterr().out
+    assert seen == [2]
+    assert cached_ids() - before == set()
+
+
 def test_validate_many_fused_one_scan(spark, data):
-    """Multi-manifest fusion (engine.validate_many): violations and verdicts
-    equal the per-engine union EXACTLY, and for row-rule-only manifests the
+    """Multi-manifest fusion (engine.validate_many, also the one-engine
+    form validate runs): violations and verdicts equal the per-engine
+    union EXACTLY, and for row-rule-only manifests the
     fused violations plan reads the input ONCE — the per-engine path costs
     one full scan per manifest, which at 100 TB with M bound manifests is
     M-1 scans of pure waste for row-local work."""
@@ -703,9 +744,6 @@ def test_validate_many_fused_one_scan(spark, data):
             ],
         }
     )
-    engines = [ValidationEngine(m1), ValidationEngine(m2)]
-    fused = validate_many(engines, df, cache_violations=False)
-
     def vkey(rows):
         return sorted(
             (r["schema_id"], r["instance_name"], tuple(r["absolute_path"]),
@@ -713,19 +751,6 @@ def test_validate_many_fused_one_scan(spark, data):
             for r in rows
         )
 
-    per = [e.validate(df, cache_violations=False) for e in engines]
-    assert vkey(fused.violations.collect()) == vkey(
-        [r for rep in per for r in rep.violations.collect()]
-    )
-    assert sorted(map(tuple, fused.verdicts.collect())) == sorted(
-        tuple(r) for rep in per for r in rep.verdicts.collect()
-    )
-    # m1 finds enum violations (injected 'operator' roles); m2's range rule
-    # (minimum 1) fires on every turn_idx=0 row — both manifests contribute
-    assert fused.violations.filter("schema_id like 'schemas/m1/%'").count() > 0
-    assert fused.violations.filter("schema_id like 'schemas/m2/%'").count() > 0
-
-    # the one-scan claim, on the plan itself
     import re
 
     def n_scans(frame):
@@ -736,14 +761,30 @@ def test_validate_many_fused_one_scan(spark, data):
         # the operator name, so a raw substring count double-counts
         return len(re.findall(r"\(\d+\) Scan parquet", buf.getvalue()))
 
-    assert n_scans(fused.violations) == 1
-    # per-engine union reads it twice
-    from functools import reduce
+    # the reference is each engine's violations() + verdicts(): the
+    # per-engine path that validate_many (and so validate) replaces
+    for engines in ([ValidationEngine(m1), ValidationEngine(m2)], [ValidationEngine(m1)]):
+        fused = validate_many(engines, df, cache_violations=False)
+        per_v = [e.violations(df) for e in engines]
+        per_verdicts = [e.verdicts(df, v) for e, v in zip(engines, per_v)]
+        assert vkey(fused.violations.collect()) == vkey(
+            [r for v in per_v for r in v.collect()]
+        )
+        assert sorted(map(tuple, fused.verdicts.collect())) == sorted(
+            tuple(r) for vd in per_verdicts for r in vd.collect()
+        )
+        # m1 finds enum violations (injected 'operator' roles); m2's range
+        # rule (minimum 1) fires on every turn_idx=0 row — every bound
+        # manifest contributes
+        assert fused.violations.filter("schema_id like 'schemas/m1/%'").count() > 0
+        n_m2 = fused.violations.filter("schema_id like 'schemas/m2/%'").count()
+        assert (n_m2 > 0) == (len(engines) == 2)
+        # the one-scan claim, on the plan itself
+        assert n_scans(fused.violations) == 1
+        # per-engine union reads it once per manifest
+        from functools import reduce
 
-    union = reduce(
-        lambda a, b: a.unionByName(b), [rep.violations for rep in per]
-    )
-    assert n_scans(union) == 2
+        assert n_scans(reduce(lambda a, b: a.unionByName(b), per_v)) == len(engines)
 
 
 def test_cli_quarantine_rejects_sample_fraction(spark, data, capsys):
