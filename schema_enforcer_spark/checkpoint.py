@@ -36,9 +36,9 @@ class CheckpointManager:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # the pending subset of the most recent run() — callers using
-        # defer_record pass it back to record() so lineage row counts don't
-        # re-aggregate the full input
+        # the pending subset of the most recent run() — callers pass it
+        # back to record() so lineage row counts don't re-aggregate the
+        # full input
         self.last_pending: DataFrame | None = None
 
     def lineage(self) -> DataFrame:
@@ -98,10 +98,14 @@ class CheckpointManager:
         instance 'table', which no data row carries — partition-level resume
         can never clear them, so an unresolved table FAIL forces a full
         re-validation instead of a nothing-pending success."""
+        # the newest row by (validated_at, run_ns), the max_by key of
+        # completed_partitions: run_ns breaks validated_at ties. A sort +
+        # limit, not a global max_by, which would cost a second Spark job
+        # (its shuffle stage) on every resume
         rows = (
             self.lineage()
             .filter((F.col("rule_set_hash") == rule_set_hash) & (F.col("partition_id") == "table"))
-            .orderBy(F.col("validated_at").desc())
+            .orderBy(F.col("validated_at").desc(), F.col("run_ns").desc())
             .limit(1)
             .collect()
         )
@@ -135,10 +139,10 @@ class CheckpointManager:
     def record(self, df: DataFrame, engine: ValidationEngine, report: ValidationReport) -> None:
         """Append lineage rows for every partition in this run. Call AFTER
         the report's outputs are materialized/written — recording first would
-        mark partitions complete whose results never landed (see run()'s
-        defer_record). `df` may be the full input: lineage rows come from the
-        report's verdicts (left-joined for counts), so partitions outside
-        this run's verdict set never gain rows."""
+        mark partitions complete whose results never landed (the next resume
+        would skip them forever). `df` may be the full input: lineage rows
+        come from the report's verdicts (left-joined for counts), so
+        partitions outside this run's verdict set never gain rows."""
         import time
 
         h = engine.manifest.rule_set_hash()
@@ -170,27 +174,17 @@ class CheckpointManager:
         engine: ValidationEngine,
         ref_tables: dict[str, DataFrame] | None = None,
         verify_counts: bool = False,
-        defer_record: bool = False,
     ) -> tuple[ValidationReport | None, int]:
-        """Validate only pending partitions; record lineage; return
-        (report, n_pending_rows). report is None when nothing is pending —
-        which, because only PASS verdicts complete a partition, means every
-        partition of the input has a recorded PASS.
+        """Validate only pending partitions; return (report, n_pending_rows).
+        report is None when nothing is pending — which, because only PASS
+        verdicts complete a partition, means every partition of the input
+        has a recorded PASS.
 
-        defer_record=True skips the lineage append so the caller can
-        materialize its own outputs FIRST and then call
-        ``record(df, engine, report)`` — otherwise a failed downstream write
-        would leave partitions marked complete whose violation rows never
-        landed anywhere (the next resume would skip them forever)."""
+        Nothing is recorded here: the caller materializes its own outputs
+        FIRST and then calls ``record(self.last_pending, engine, report)``."""
         pend = self.pending(df, engine, verify_counts=verify_counts)
         self.last_pending = pend
         n = pend.count()
         if n == 0:
             return None, 0
-        report = engine.validate(pend, ref_tables)
-        if not defer_record:
-            # materialize before recording so lineage never claims un-finished work
-            report.violations.count()
-            report.verdicts.count()
-            self.record(pend, engine, report)
-        return report, n
+        return engine.validate(pend, ref_tables), n

@@ -660,10 +660,17 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         eng_kw["drift_baselines"] = load_drift_baselines(spark, store)
 
-    if args.stats_columns and not args.checkpoint:
-        print("ERROR | --stats-columns requires --checkpoint (the stats "
-              "store lives under the checkpoint dir)", file=sys.stderr)
-        return 2
+    stats_cols = [c for c in (args.stats_columns or "").split(",") if c]
+    if stats_cols:
+        if not args.checkpoint:
+            print("ERROR | --stats-columns requires --checkpoint (the stats "
+                  "store lives under the checkpoint dir)", file=sys.stderr)
+            return 2
+        # rejected before anything is written: lineage recorded without its
+        # stats rows would never re-validate, so the stats would stay lost
+        if missing := [c for c in stats_cols if c not in df.columns]:
+            print(f"ERROR | --stats-columns not in the input: {missing}", file=sys.stderr)
+            return 2
 
     if args.sample_fraction is not None:
         if not (0.0 < args.sample_fraction <= 1.0):
@@ -776,15 +783,15 @@ def main(argv: list[str] | None = None) -> int:
     cm = None
     if args.checkpoint:
         cm = CheckpointManager(spark, args.checkpoint)
-        # defer_record: lineage is appended only AFTER the --output writes
-        # succeed — recording first would mark partitions complete whose
-        # violation rows never landed (permanently absent from the output)
-        report, n_pending = cm.run(df, eng, ref_tables, defer_record=True)
+        # run() records nothing: lineage is appended only AFTER the
+        # --output and stats writes succeed — recording first would mark
+        # partitions complete whose rows never landed (permanently absent)
+        report, n_pending = cm.run(df, eng, ref_tables)
         if report is None:
             # sound because only PASS verdicts complete a partition: FAILed
             # partitions always re-validate, so nothing-pending ⇒ all PASS
             print(f"ALL PARTITIONS ALREADY VALIDATED (PASS) [{manifest.id}] — nothing pending")
-            if args.stats_columns:
+            if stats_cols:
                 # stats for every partition are already in the store — the
                 # merged view costs one read of the sketch rows, zero data
                 _print_merged_stats()
@@ -849,30 +856,28 @@ def main(argv: list[str] | None = None) -> int:
             report.verdicts.write.mode("overwrite").parquet(f"{root}/verdicts")
 
     if cm is not None:
+        # everything below covers only the PENDING subset this run
+        # validated: earlier partitions' stats and lineage rows are already
+        # stored, and aggregating the full input would re-scan everything
+        pending = cm.last_pending
+        if stats_cols:
+            from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
+
+            # before record(): a run that dies between the two re-validates
+            # these partitions and rewrites their stats rows, and
+            # merged_column_stats keeps only the newest row per
+            # (partition_id, col_name)
+            write_partition_stats(
+                pending, stats_cols, stats_store_path(args.checkpoint), eng._instance_col(pending)
+            )
         if not args.output:
             # no output sink: materialize before recording so lineage never
             # claims unfinished work
             report.violations.count()
             report.verdicts.count()
-        # lineage row counts come from the PENDING subset this run actually
-        # validated — aggregating the full input would re-scan everything
-        cm.record(cm.last_pending if cm.last_pending is not None else df, eng, report)
-
-    if args.stats_columns:
-        from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
-
-        cols = [c for c in args.stats_columns.split(",") if c]
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            print(f"ERROR | --stats-columns not in the input: {missing}", file=sys.stderr)
-            return 2
-        # sketch only what this run validated; earlier partitions' rows are
-        # already in the store — that's the incremental contract
-        stats_df = cm.last_pending if (cm is not None and cm.last_pending is not None) else df
-        write_partition_stats(
-            stats_df, cols, stats_store_path(args.checkpoint), eng._instance_col(stats_df)
-        )
-        _print_merged_stats()
+        cm.record(pending, eng, report)
+        if stats_cols:
+            _print_merged_stats()
 
     # FAIL-line format mirrors ValidationResult.print
     # (/root/reference/schema_enforcer/validation.py:53-91)

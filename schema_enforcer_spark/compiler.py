@@ -344,7 +344,7 @@ def compile_row_rule(df: DataFrame, manifest_id: str, rule: Rule) -> CompiledRul
         fv = (
             py_repr(F.col(col_name), _dtype_of(df, col_name)) if col_name else F.lit(None).cast("string")
         )
-        rid = rule.get("id") or f"{manifest_id}/expression/{col_name or '*'}"
+        rid = rule.schema_id(manifest_id, col_name or "*")
         return CompiledRule(rule_id=rid, column=col_name, predicate=pred, message=msg, failing_value=fv)
     col_name = rule.get("column")
     col = F.col(col_name) if col_name else None
@@ -354,7 +354,7 @@ def compile_row_rule(df: DataFrame, manifest_id: str, rule: Rule) -> CompiledRul
     if custom_msg := rule.get("message"):
         msg = F.lit(custom_msg)
     fv = col.cast("string") if col_name else F.lit(None).cast("string")
-    rid = rule.get("id") or f"{manifest_id}/{rule.kind}/{col_name or '*'}"
+    rid = rule.schema_id(manifest_id, col_name or "*")
     return CompiledRule(rule_id=rid, column=col_name, predicate=pred, message=msg, failing_value=fv)
 
 
@@ -377,7 +377,7 @@ def compile_row_rules(df: DataFrame, manifest: Manifest) -> list[CompiledRule]:
                 # schema_id never changes with column presence.
                 compiled.append(
                     CompiledRule(
-                        rule_id=rule.get("id") or f"{manifest.id}/{rule.kind}/{col_name}",
+                        rule_id=rule.schema_id(manifest.id, col_name),
                         column=col_name,
                         predicate=F.lit(False),
                         message=F.lit(f"'{col_name.split('.')[-1]}' is a required property"),

@@ -35,21 +35,89 @@ from pyspark.sql.window import Window
 from schema_enforcer_spark.compiler import CompiledRule, compile_row_rule, compile_row_rules, py_repr, _dtype_of
 from schema_enforcer_spark.manifest import Manifest, Rule
 
-VIOLATION_COLUMNS = [
-    "schema_id",
-    "result",
-    "instance_name",
-    "instance_location",
-    "instance_type",
-    "absolute_path",
-    "failing_value",
-    "message",
-]
-
-_VIOLATION_SCHEMA_DDL = (
-    "schema_id string, result string, instance_name string, instance_location string, "
-    "instance_type string, absolute_path array<string>, failing_value string, message string"
+# The violation row, defined once: every evaluator emits it through
+# _violation_rows, and VIOLATION_COLUMNS and the empty frames derive from
+# this schema.
+VIOLATION_SCHEMA = T.StructType(
+    [
+        T.StructField("schema_id", T.StringType()),
+        T.StructField("result", T.StringType()),
+        T.StructField("instance_name", T.StringType()),
+        T.StructField("instance_location", T.StringType()),
+        T.StructField("instance_type", T.StringType()),
+        T.StructField("absolute_path", T.ArrayType(T.StringType())),
+        T.StructField("failing_value", T.StringType()),
+        T.StructField("message", T.StringType()),
+    ]
 )
+VIOLATION_COLUMNS = VIOLATION_SCHEMA.fieldNames()
+
+# The rule-specific part of a row, as carried by the row- and window-grain
+# violation arrays; the instance fields are attached when they explode.
+_ELEMENT_FIELDS = ("schema_id", "absolute_path", "failing_value", "message")
+
+
+def _array_type(fields) -> str:
+    return T.ArrayType(T.StructType([VIOLATION_SCHEMA[f] for f in fields])).simpleString()
+
+
+_ELEMENT_ARRAY_T = _array_type(_ELEMENT_FIELDS)
+
+
+def _violation_element(schema_id: Column, path: Column, failing_value: Column, message: Column, *tags: Column) -> Column:
+    """One violation-array element; *tags* are aliased fields appended
+    after the four element fields."""
+    return F.struct(
+        schema_id.alias("schema_id"),
+        path.alias("absolute_path"),
+        failing_value.alias("failing_value"),
+        message.alias("message"),
+        *tags,
+    )
+
+
+def _or_empty(collection: Column, violations: Column) -> Column:
+    """A NULL collection contributes an EMPTY violation array — concat()
+    with NULL would otherwise null out every other rule's violations for
+    the row."""
+    return F.when(collection.isNull(), F.array().cast(_ELEMENT_ARRAY_T)).otherwise(violations)
+
+
+def _violation_rows(
+    frame: DataFrame,
+    instance: Column,
+    schema_id: Column,
+    path: Column,
+    failing_value: Column,
+    message: Column,
+    location: str | Column,
+    grain: str | Column,
+    **extra: Column,
+) -> DataFrame:
+    """The one violation-row projection (:data:`VIOLATION_SCHEMA` order).
+    *location* and *grain* are strings or columns; *extra* columns follow
+    the row under their keyword names (validate_many's ``_mid`` tag).
+
+    One ``toDF`` names every column: an ``alias`` per column would cost
+    a driver↔JVM round trip each, and the optimizer collapses the
+    renaming projection, so the physical plan is the same."""
+    return frame.select(
+        schema_id,
+        F.lit("FAIL"),
+        instance,
+        F.lit(location),
+        F.lit(grain),
+        path,
+        failing_value,
+        message,
+        *extra.values(),
+    ).toDF(*VIOLATION_COLUMNS, *extra)
+
+
+def _message(rule: Rule, default: Column) -> Column:
+    """The rule's custom ``message`` when it declares one, else *default*."""
+    custom = rule.get("message")
+    return F.lit(custom) if custom else default
 
 
 @dataclass
@@ -206,17 +274,13 @@ class ValidationEngine:
         elems = [*key_path, *(F.lit(p) for p in leaf.split("."))] if leaf else key_path
         return F.array(*elems) if elems else F.array().cast("array<string>")
 
-    def _wrap(self, df: DataFrame, schema_id: Column, path: Column, failing_value: Column, message: Column) -> list[Column]:
-        return [
-            schema_id.alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            self._instance_col(df).alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            path.alias("absolute_path"),
-            failing_value.alias("failing_value"),
-            message.alias("message"),
-        ]
+    def _rows(
+        self, frame: DataFrame, instance: Column, schema_id: Column, path: Column, failing_value: Column, message: Column
+    ) -> DataFrame:
+        """:func:`_violation_rows` at this engine's location and grain."""
+        return _violation_rows(
+            frame, instance, schema_id, path, failing_value, message, self.manifest.table, self.instance_type
+        )
 
     # -- row rules ---------------------------------------------------------
 
@@ -272,14 +336,12 @@ class ValidationEngine:
                 pred = ~cond | inner
                 failing = tc.cast("string")
                 col_name = tc_name
-            if m := rule.get("message"):
-                msg = F.lit(m)
             out.append(
                 CompiledRule(
-                    rule_id=rule.get("id") or f"{self.manifest.id}/conditional/{col_name}",
+                    rule_id=rule.schema_id(self.manifest.id, col_name),
                     column=tc_name,
                     predicate=pred,
-                    message=msg,
+                    message=_message(rule, msg),
                     failing_value=failing,
                 )
             )
@@ -310,47 +372,32 @@ class ValidationEngine:
             target_dt = _dtype_in(elem_dt, field, []) if field else elem_dt
             check = rule.params["check"]
             label = (field or col_name).split(".")[-1]
-            rid = rule.get("id") or f"{self.manifest.id}/items/{col_name}" + (f"/{field}" if field else "")
-            custom_msg = rule.get("message")
+            rid = rule.schema_id(self.manifest.id, col_name + (f"/{field}" if field else ""))
             key_elems = self._key_path(df)
 
             # Spark HOF lambdas must take exactly the declared arity with no
             # extra/default parameters — capture rule context via a factory
             # closure instead (fresh per loop iteration, so no late binding).
-            def make_viol(_field, _check, _label, _rid, _cm, _tdt, _col, _keys, _rule):
+            def make_viol(_field, _check, _label, _rid, _tdt, _col, _keys, _rule):
                 def viol(x, i):
                     elem = x
                     for part in (_field.split(".") if _field else []):
                         elem = elem[part]
                     pred, msg = compile_check(elem, _tdt, _check, _rule.get, _label)
-                    if _cm:
-                        msg = F.lit(_cm)
                     # 'required' anchors at the element object (jsonschema
                     # names the missing key, the path stops at the index)
                     path_tail = [] if _check in ("required",) else ([F.lit(p) for p in _field.split(".")] if _field else [])
                     path = F.array(*_keys, F.lit(_col), i.cast("string"), *path_tail)
                     return F.when(
                         ~F.coalesce(pred, F.lit(True)),
-                        F.struct(
-                            F.lit(_rid).alias("schema_id"),
-                            path.alias("absolute_path"),
-                            elem.cast("string").alias("failing_value"),
-                            msg.alias("message"),
-                        ),
+                        _violation_element(F.lit(_rid), path, elem.cast("string"), _message(_rule, msg)),
                     )
 
                 return viol
 
-            viol = make_viol(field, check, label, rid, custom_msg, target_dt, col_name, key_elems, rule)
-
-            # a NULL array must contribute an EMPTY violation array — concat()
-            # with NULL would otherwise null out every other rule's violations
-            # for the row
-            empty = F.array().cast(
-                "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-            )
-            arr = F.array_compact(F.transform(F.col(col_name), viol))
-            out.append(F.when(F.col(col_name).isNull(), empty).otherwise(arr))
+            viol = make_viol(field, check, label, rid, target_dt, col_name, key_elems, rule)
+            col = F.col(col_name)
+            out.append(_or_empty(col, F.array_compact(F.transform(col, viol))))
         return out
 
     def _prefix_items_violation_arrays(self, df: DataFrame) -> list[Column]:
@@ -364,10 +411,6 @@ class ValidationEngine:
         explode, no shuffle, same single-pass shape as the items rule."""
         from schema_enforcer_spark.compiler import compile_check, has_column_path, py_repr
 
-        _VIOL_T = (
-            "array<struct<schema_id:string,absolute_path:array<string>,"
-            "failing_value:string,message:string>>"
-        )
         out: list[Column] = []
         for rule in self.manifest.row_rules:
             if rule.kind != "prefix_items":
@@ -383,8 +426,7 @@ class ValidationEngine:
             elem_dt = arr_dt.elementType
             checks = rule.params["checks"]
             add = rule.get("additional_items")
-            rid = rule.get("id") or f"{self.manifest.id}/prefix_items/{col_name}"
-            custom_msg = rule.get("message")
+            rid = F.lit(rule.schema_id(self.manifest.id, col_name))
             key_elems = self._key_path(df)
             col = F.col(col_name)
             n = len(checks)
@@ -394,16 +436,14 @@ class ValidationEngine:
             for p, spec in enumerate(checks):
                 elem = F.element_at(col, p + 1)
                 pred, msg = compile_check(elem, elem_dt, spec["kind"], spec.get, label)
-                if custom_msg:
-                    msg = F.lit(custom_msg)
                 structs.append(
                     F.when(
                         (F.size(col) > p) & ~F.coalesce(pred, F.lit(True)),
-                        F.struct(
-                            F.lit(rid).alias("schema_id"),
-                            F.array(*key_elems, F.lit(col_name), F.lit(str(p))).alias("absolute_path"),
-                            elem.cast("string").alias("failing_value"),
-                            msg.alias("message"),
+                        _violation_element(
+                            rid,
+                            F.array(*key_elems, F.lit(col_name), F.lit(str(p))),
+                            elem.cast("string"),
+                            _message(rule, msg),
                         ),
                     )
                 )
@@ -421,20 +461,15 @@ class ValidationEngine:
                         F.lit(" were unexpected)")
                     ),
                 )
-                if custom_msg:
-                    add_msg = F.lit(custom_msg)
                 arrays.append(
                     F.array_compact(
                         F.array(
                             F.when(
                                 F.size(col) > n,
-                                F.struct(
-                                    F.lit(rid).alias("schema_id"),
-                                    # jsonschema anchors this error at the
-                                    # array itself, not an index
-                                    F.array(*key_elems, F.lit(col_name)).alias("absolute_path"),
-                                    reprs.alias("failing_value"),
-                                    add_msg.alias("message"),
+                                # jsonschema anchors this error at the array
+                                # itself, not an index
+                                _violation_element(
+                                    rid, F.array(*key_elems, F.lit(col_name)), reprs, _message(rule, add_msg)
                                 ),
                             )
                         )
@@ -442,29 +477,26 @@ class ValidationEngine:
                 )
             elif isinstance(add, dict):
 
-                def make_tail_viol(_spec, _rid, _cm, _edt, _col, _keys, _n, _label):
+                def make_tail_viol(_spec, _rid, _rule, _edt, _col, _keys, _n, _label):
                     def viol(x, i):
                         pred, msg = compile_check(x, _edt, _spec["kind"], _spec.get, _label)
-                        if _cm:
-                            msg = F.lit(_cm)
                         return F.when(
                             (i >= _n) & ~F.coalesce(pred, F.lit(True)),
-                            F.struct(
-                                F.lit(_rid).alias("schema_id"),
-                                F.array(*_keys, F.lit(_col), i.cast("string")).alias("absolute_path"),
-                                x.cast("string").alias("failing_value"),
-                                msg.alias("message"),
+                            _violation_element(
+                                _rid,
+                                F.array(*_keys, F.lit(_col), i.cast("string")),
+                                x.cast("string"),
+                                _message(_rule, msg),
                             ),
                         )
 
                     return viol
 
-                tail = make_tail_viol(add, rid, custom_msg, elem_dt, col_name, key_elems, n, label)
+                tail = make_tail_viol(add, rid, rule, elem_dt, col_name, key_elems, n, label)
                 arrays.append(F.array_compact(F.transform(col, tail)))
 
             combined = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-            empty = F.array().cast(_VIOL_T)
-            out.append(F.when(col.isNull(), empty).otherwise(combined))
+            out.append(_or_empty(col, combined))
         return out
 
     def _pattern_properties_violation_arrays(self, df: DataFrame) -> list[Column]:
@@ -499,11 +531,10 @@ class ValidationEngine:
             val_dt = map_dt.valueType
             target_dt = _dtype_in(val_dt, field, []) if field else val_dt
             label = (field or col_name).split(".")[-1]
-            rid = rule.get("id") or f"{self.manifest.id}/pattern_properties/{col_name}"
-            custom_msg = rule.get("message")
+            rid = rule.schema_id(self.manifest.id, col_name)
             key_elems = self._key_path(df)
 
-            def make_viol(_field, _check, _label, _rid, _cm, _tdt, _col, _keys, _rule, _pat, _rej):
+            def make_viol(_field, _check, _label, _rid, _tdt, _col, _keys, _rule, _pat, _rej):
                 def viol(e):
                     matched = e["key"].rlike(_pat)
                     branches = []
@@ -514,15 +545,15 @@ class ValidationEngine:
                         branches.append(
                             (
                                 ~matched,
-                                F.struct(
-                                    F.lit(_rid).alias("schema_id"),
-                                    F.array(*_keys, F.lit(_col), e["key"]).alias("absolute_path"),
-                                    e["key"].alias("failing_value"),
+                                _violation_element(
+                                    F.lit(_rid),
+                                    F.array(*_keys, F.lit(_col), e["key"]),
+                                    e["key"],
                                     F.concat(
                                         F.lit("Additional properties are not allowed ('"),
                                         e["key"],
                                         F.lit("' was unexpected)"),
-                                    ).alias("message"),
+                                    ),
                                 ),
                             )
                         )
@@ -539,19 +570,17 @@ class ValidationEngine:
                         else:
                             getter = _rule.get
                         pred, msg = compile_check(val, _tdt, _check, getter, _label)
-                        if _cm:
-                            msg = F.lit(_cm)
                         path_tail = [] if _check in ("required",) else (
                             [F.lit(p) for p in _field.split(".")] if _field else []
                         )
                         branches.append(
                             (
                                 matched & ~F.coalesce(pred, F.lit(True)),
-                                F.struct(
-                                    F.lit(_rid).alias("schema_id"),
-                                    F.array(*_keys, F.lit(_col), e["key"], *path_tail).alias("absolute_path"),
-                                    val.cast("string").alias("failing_value"),
-                                    msg.alias("message"),
+                                _violation_element(
+                                    F.lit(_rid),
+                                    F.array(*_keys, F.lit(_col), e["key"], *path_tail),
+                                    val.cast("string"),
+                                    _message(_rule, msg),
                                 ),
                             )
                         )
@@ -563,14 +592,11 @@ class ValidationEngine:
                 return viol
 
             viol = make_viol(
-                field, check, label, rid, custom_msg, target_dt, col_name,
+                field, check, label, rid, target_dt, col_name,
                 key_elems, rule, pattern, reject_extras,
             )
-            empty = F.array().cast(
-                "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-            )
-            arr = F.array_compact(F.transform(F.map_entries(F.col(col_name)), viol))
-            out.append(F.when(F.col(col_name).isNull(), empty).otherwise(arr))
+            col = F.col(col_name)
+            out.append(_or_empty(col, F.array_compact(F.transform(F.map_entries(col), viol))))
         return out
 
     def _property_names_violation_arrays(self, df: DataFrame) -> list[Column]:
@@ -598,33 +624,24 @@ class ValidationEngine:
                     f"{map_dt.simpleString()}, not a map"
                 )
             check = rule.params["check"]
-            rid = rule.get("id") or f"{self.manifest.id}/property_names/{col_name}"
-            custom_msg = rule.get("message")
+            rid = rule.schema_id(self.manifest.id, col_name)
             key_elems = self._key_path(df)
 
-            def make_viol(_check, _rid, _cm, _col, _keys, _rule):
+            def make_viol(_check, _rid, _col, _keys, _rule):
                 def viol(k):
                     pred, msg = compile_check(k, T.StringType(), _check, _rule.get, _col)
-                    if _cm:
-                        msg = F.lit(_cm)
                     return F.when(
                         ~F.coalesce(pred, F.lit(True)),
-                        F.struct(
-                            F.lit(_rid).alias("schema_id"),
-                            F.array(*_keys, F.lit(_col), k).alias("absolute_path"),
-                            k.alias("failing_value"),
-                            msg.alias("message"),
+                        _violation_element(
+                            F.lit(_rid), F.array(*_keys, F.lit(_col), k), k, _message(_rule, msg)
                         ),
                     )
 
                 return viol
 
-            viol = make_viol(check, rid, custom_msg, col_name, key_elems, rule)
-            empty = F.array().cast(
-                "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-            )
-            arr = F.array_compact(F.transform(F.map_keys(F.col(col_name)), viol))
-            out.append(F.when(F.col(col_name).isNull(), empty).otherwise(arr))
+            viol = make_viol(check, rid, col_name, key_elems, rule)
+            col = F.col(col_name)
+            out.append(_or_empty(col, F.array_compact(F.transform(F.map_keys(col), viol))))
         return out
 
     def row_fail_count(self, df: DataFrame) -> Column:
@@ -663,11 +680,8 @@ class ValidationEngine:
         structs = [
             F.when(
                 ~F.coalesce(cr.predicate, F.lit(True)),
-                F.struct(
-                    F.lit(cr.rule_id).alias("schema_id"),
-                    self._path(key_path, cr.column).alias("absolute_path"),
-                    cr.failing_value.alias("failing_value"),
-                    cr.message.alias("message"),
+                _violation_element(
+                    F.lit(cr.rule_id), self._path(key_path, cr.column), cr.failing_value, cr.message
                 ),
             )
             for cr in compiled
@@ -700,16 +714,7 @@ class ValidationEngine:
             .select("instance_name", F.explode_outer("_v").alias("v"))
             .filter(F.col("v").isNotNull())
         )
-        return exploded.select(
-            F.col("v.schema_id").alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.col("v.absolute_path").alias("absolute_path"),
-            F.col("v.failing_value").alias("failing_value"),
-            F.col("v.message").alias("message"),
-        )
+        return self._rows(exploded, F.col("instance_name"), *(F.col(f"v.{f}") for f in _ELEMENT_FIELDS))
 
     # -- table rules -------------------------------------------------------
 
@@ -721,31 +726,23 @@ class ValidationEngine:
         # is min() over the group — F.first() would be nondeterministic when
         # a duplicated key spans instances.
         cols = rule.params["columns"]
-        rid = rule.get("id") or f"{self.manifest.id}/unique/{'+'.join(cols)}"
         key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
         dups = (
             df.groupBy(*cols)
             .agg(F.count(F.lit(1)).alias("_n"), F.min(self._instance_col(df)).alias("instance_name"))
             .filter(F.col("_n") > 1)
         )
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("("), key_str, F.lit(f") appears "), F.col("_n").cast("string"),
-                F.lit(f" times; ({', '.join(cols)}) must be unique"),
-            )
-        )
-        return dups.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
+        message = _message(rule, F.concat(
+            F.lit("("), key_str, F.lit(f") appears "), F.col("_n").cast("string"),
+            F.lit(f" times; ({', '.join(cols)}) must be unique"),
+        ))
+        return self._rows(
+            dups,
             F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            key_str.alias("failing_value"),
-            message.alias("message"),
+            F.lit(rule.schema_id(self.manifest.id, "+".join(cols))),
+            F.array(*[F.col(c).cast("string") for c in cols]),
+            key_str,
+            message,
         )
 
     def _referential_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -756,7 +753,6 @@ class ValidationEngine:
         ref_name, ref_cols = rule.params["ref_table"], rule.params["ref_columns"]
         if ref_name not in ref_tables:
             raise KeyError(f"referential rule needs ref table {ref_name!r} in ref_tables")
-        rid = rule.get("id") or f"{self.manifest.id}/referential/{'+'.join(cols)}"
         # normalize_keys: '-'↔'_' key normalization before the join (F1 —
         # the reference normalizes hostnames both ways before its peer
         # lookup, check_peers.py:44-51); without it referential rules on
@@ -790,23 +786,16 @@ class ValidationEngine:
         )
         orphans = orphan_keys.join(F.broadcast(ref_keys) if rule.get("broadcast", True) else ref_keys, on=cols, how="left_anti")
         key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str, F.lit(f"' is not present in {ref_name}({', '.join(ref_cols)})")
-            )
-        )
-        return orphans.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
+        message = _message(rule, F.concat(
+            F.lit("'"), key_str, F.lit(f"' is not present in {ref_name}({', '.join(ref_cols)})")
+        ))
+        return self._rows(
+            orphans,
             F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            key_str.alias("failing_value"),
-            message.alias("message"),
+            F.lit(rule.schema_id(self.manifest.id, "+".join(cols))),
+            F.array(*[F.col(c).cast("string") for c in cols]),
+            key_str,
+            message,
         )
 
     def _equals_table_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -864,9 +853,6 @@ class ValidationEngine:
                     f"equals_table: column {c!r} dtype mismatch — input is {lt}, "
                     f"{ref_name} is {rt}; cast the tables to agree before validating"
                 )
-        rid = rule.get("id") or f"{self.manifest.id}/equals_table/{ref_name}"
-        custom_msg = rule.get("message")
-
         mode = rule.get("compare_mode", "auto")
         if mode == "auto":
             mode = (
@@ -888,7 +874,7 @@ class ValidationEngine:
                 *keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r")
             )
             j = left.join(right, on=keys, how="full_outer")
-        return self._equals_table_emit(j, df, ref, keys, comp, ref_name, rid, custom_msg)
+        return self._equals_table_emit(j, df, ref, keys, comp, rule)
 
     def _equals_table_hash_join(
         self, df: DataFrame, ref: DataFrame, keys: list[str], comp: list[str], rule: Rule
@@ -1017,9 +1003,7 @@ class ValidationEngine:
         ref: DataFrame,
         keys: list[str],
         comp: list[str],
-        ref_name: str,
-        rid: str,
-        custom_msg: str | None,
+        rule: Rule,
     ) -> DataFrame:
         """Shared violation-shaping tail of equals_table: ``j`` carries
         keys, compared values + ``_r_*`` twins, ``_inst`` and the
@@ -1027,18 +1011,18 @@ class ValidationEngine:
         or the hash-precompare fetch-back)."""
         from schema_enforcer_spark.compiler import py_repr
 
+        ref_name = rule.params["ref_table"]
         key_cols = [F.col(c).cast("string") for c in keys]
         key_str = F.concat_ws("|", *key_cols)
-        _VIOL_T = (
-            "array<struct<absolute_path:array<string>,failing_value:string,message:string>>"
-        )
+        # the rule's schema_id is one literal for every row, so the element
+        # carries only the other three fields
         structs: list[Column] = [
             F.when(
                 F.col("_r").isNull(),
                 F.struct(
                     F.array(*key_cols).alias("absolute_path"),
                     key_str.alias("failing_value"),
-                    (F.lit(custom_msg) if custom_msg else F.concat(
+                    _message(rule, F.concat(
                         F.lit("'"), key_str, F.lit(f"' is missing from {ref_name}")
                     )).alias("message"),
                 ),
@@ -1048,7 +1032,7 @@ class ValidationEngine:
                 F.struct(
                     F.array(*key_cols).alias("absolute_path"),
                     key_str.alias("failing_value"),
-                    (F.lit(custom_msg) if custom_msg else F.concat(
+                    _message(rule, F.concat(
                         F.lit("'"), key_str, F.lit(f"' is missing from the input (present in {ref_name})")
                     )).alias("message"),
                 ),
@@ -1069,7 +1053,7 @@ class ValidationEngine:
                     F.struct(
                         F.array(*key_cols, F.lit(c)).alias("absolute_path"),
                         F.col(c).cast("string").alias("failing_value"),
-                        (F.lit(custom_msg) if custom_msg else F.concat(
+                        _message(rule, F.concat(
                             lrep, F.lit(f" does not equal {ref_name}.{c} "), rrep
                         )).alias("message"),
                     ),
@@ -1079,17 +1063,13 @@ class ValidationEngine:
             # a reference-only row has no input instance: attribute it to
             # its key so the verdict grain still isolates the failure
             F.coalesce(F.col("_inst"), key_str).alias("instance_name"),
-            F.explode(F.array_compact(F.array(*structs).cast(_VIOL_T))).alias("v"),
+            F.explode(F.array_compact(F.array(*structs).cast(_array_type(_ELEMENT_FIELDS[1:])))).alias("v"),
         )
-        return exploded.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
+        return self._rows(
+            exploded,
             F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.col("v.absolute_path").alias("absolute_path"),
-            F.col("v.failing_value").alias("failing_value"),
-            F.col("v.message").alias("message"),
+            F.lit(rule.schema_id(self.manifest.id, ref_name)),
+            *(F.col(f"v.{f}") for f in _ELEMENT_FIELDS[1:]),
         )
 
     def _cardinality_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1108,7 +1088,6 @@ class ValidationEngine:
         hi = rule.get("max_count")
         if ref_name not in ref_tables:
             raise KeyError(f"cardinality rule needs ref table {ref_name!r} in ref_tables")
-        rid = rule.get("id") or f"{self.manifest.id}/cardinality/{'+'.join(cols)}"
         ref_counts = (
             ref_tables[ref_name]
             .filter(reduce(lambda a, b: a & b, [F.col(rc).isNotNull() for rc in ref_cols]))
@@ -1134,24 +1113,17 @@ class ValidationEngine:
             else (f"at least {lo}" if lo is not None else f"at most {hi}")
         )
         key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str, F.lit(f"' matches "), F.col("_rc").cast("string"),
-                F.lit(f" row(s) in {ref_name}({', '.join(ref_cols)}); expected {bounds}"),
-            )
-        )
-        return joined.filter(fail).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
+        message = _message(rule, F.concat(
+            F.lit("'"), key_str, F.lit(f"' matches "), F.col("_rc").cast("string"),
+            F.lit(f" row(s) in {ref_name}({', '.join(ref_cols)}); expected {bounds}"),
+        ))
+        return self._rows(
+            joined.filter(fail),
             F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            F.col("_rc").cast("string").alias("failing_value"),
-            message.alias("message"),
+            F.lit(rule.schema_id(self.manifest.id, "+".join(cols))),
+            F.array(*[F.col(c).cast("string") for c in cols]),
+            F.col("_rc").cast("string"),
+            message,
         )
 
     def _fd_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
@@ -1184,10 +1156,6 @@ class ValidationEngine:
                 f"functional_dependency rule: determinant columns {sorted(clash)} "
                 "collide with the FD staging columns — rename them before validating"
             )
-        rid = (
-            rule.get("id")
-            or f"{self.manifest.id}/functional_dependency/{'+'.join(cols)}->{dep}"
-        )
         depc = F.col(dep)
         g = df.groupBy(*cols).agg(
             # exact per-group distinct (skips NULLs) + a did-we-see-NULL
@@ -1210,26 +1178,19 @@ class ValidationEngine:
                 F.lit("' vs '"), F.col("_hi").cast("string"), F.lit("'"),
             ),
         ).otherwise(F.concat(F.lit("NULL vs '"), F.col("_lo").cast("string"), F.lit("'")))
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str,
-                F.lit("' maps to "), n_values.cast("string"),
-                F.lit(f" distinct values of {dep} ("), example,
-                F.lit("); expected exactly 1"),
-            )
-        )
-        return g.filter(n_values > 1).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
+        message = _message(rule, F.concat(
+            F.lit("'"), key_str,
+            F.lit("' maps to "), n_values.cast("string"),
+            F.lit(f" distinct values of {dep} ("), example,
+            F.lit("); expected exactly 1"),
+        ))
+        return self._rows(
+            g.filter(n_values > 1),
             F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            n_values.cast("string").alias("failing_value"),
-            message.alias("message"),
+            F.lit(rule.schema_id(self.manifest.id, f"{'+'.join(cols)}->{dep}")),
+            F.array(*[F.col(c).cast("string") for c in cols]),
+            n_values.cast("string"),
+            message,
         )
 
     def _outlier_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
@@ -1297,7 +1258,6 @@ class ValidationEngine:
         col = rule.params["column"]
         k = float(rule.get("k", 1.5))
         group = list(rule.get("group_by") or [])
-        rid = rule.get("id") or f"{self.manifest.id}/outlier/{col}"
         c = F.col(col)
         if group:
             joined = df.join(bounds, on=group, how="left")
@@ -1312,26 +1272,19 @@ class ValidationEngine:
             # ANSI overflow error
             return F.coalesce(x.try_cast("decimal(18,6)").cast("string"), x.cast("string"))
 
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit(f"value "), _dec(c),
-                F.lit(f" of {col} is outside the IQR fence ["),
-                _dec(F.col("_lo")), F.lit(", "), _dec(F.col("_hi")),
-                F.lit(f"] (k={k:g})"),
-            )
-        )
-        return joined.filter(fail).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            self._instance_col(df).alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            self._path(self._key_path(df), col).alias("absolute_path"),
-            _dec(c).alias("failing_value"),
-            message.alias("message"),
+        message = _message(rule, F.concat(
+            F.lit(f"value "), _dec(c),
+            F.lit(f" of {col} is outside the IQR fence ["),
+            _dec(F.col("_lo")), F.lit(", "), _dec(F.col("_hi")),
+            F.lit(f"] (k={k:g})"),
+        ))
+        return self._rows(
+            joined.filter(fail),
+            self._instance_col(df),
+            F.lit(rule.schema_id(self.manifest.id, col)),
+            self._path(self._key_path(df), col),
+            _dec(c),
+            message,
         )
 
     def _rate_limit_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
@@ -1349,7 +1302,6 @@ class ValidationEngine:
         oc = order if isinstance(order, str) else order[0]
         wsec = int(rule.params["window_seconds"])
         mx = int(rule.params["max_count"])
-        rid = rule.get("id") or f"{self.manifest.id}/rate_limit/{'+'.join(part)}"
         w = (
             Window.partitionBy(*part)
             .orderBy(F.col(oc).cast("long"))
@@ -1362,26 +1314,17 @@ class ValidationEngine:
             F.count(F.lit(1)).over(w).alias("_c"),
         )
         key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in part])
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str, F.lit("' saw "), F.col("_c").cast("string"),
-                F.lit(f" rows within {wsec}s; at most {mx} allowed"),
-            )
-        )
-        return staged.filter(F.col("_c") > mx).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
+        message = _message(rule, F.concat(
+            F.lit("'"), key_str, F.lit("' saw "), F.col("_c").cast("string"),
+            F.lit(f" rows within {wsec}s; at most {mx} allowed"),
+        ))
+        return self._rows(
+            staged.filter(F.col("_c") > mx),
             F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(
-                *[F.col(c).cast("string") for c in part], F.col(oc).cast("string")
-            ).alias("absolute_path"),
-            F.col("_c").cast("string").alias("failing_value"),
-            message.alias("message"),
+            F.lit(rule.schema_id(self.manifest.id, "+".join(part))),
+            F.array(*[F.col(c).cast("string") for c in part], F.col(oc).cast("string")),
+            F.col("_c").cast("string"),
+            message,
         )
 
     def _fused_window_violations(self, df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -1480,24 +1423,18 @@ class ValidationEngine:
                     (F.col(f"_rn_{i}") == 1) | ~F.col(cols[-1]).eqNullSafe(F.col(aux_name))
                 )
                 key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.concat(
-                        F.lit("("), key_str, F.lit(") appears "), F.col(f"_cnt_{i}").cast("string"),
-                        F.lit(f" times; ({', '.join(cols)}) must be unique"),
-                    )
-                )
-                rid = rule.get("id") or f"{self.manifest.id}/unique/{'+'.join(cols)}"
+                msg = _message(rule, F.concat(
+                    F.lit("("), key_str, F.lit(") appears "), F.col(f"_cnt_{i}").cast("string"),
+                    F.lit(f" times; ({', '.join(cols)}) must be unique"),
+                ))
                 structs.append(
                     F.when(
                         first_of_dup_group,
-                        F.struct(
-                            F.lit(rid).alias("schema_id"),
-                            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-                            key_str.alias("failing_value"),
-                            msg.alias("message"),
+                        _violation_element(
+                            F.lit(rule.schema_id(self.manifest.id, "+".join(cols))),
+                            F.array(*[F.col(c).cast("string") for c in cols]),
+                            key_str,
+                            msg,
                         ),
                     )
                 )
@@ -1520,31 +1457,25 @@ class ValidationEngine:
                 bad = F.when(is_first, ~ok_start).otherwise(~ok_trans)
                 rep = F.coalesce(cur.cast("string"), F.lit("None"))
                 prev_rep = F.coalesce(prev.cast("string"), F.lit("None"))
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.when(
-                        is_first,
-                        F.concat(F.lit("'"), rep, F.lit(f"' is not an allowed start value for '{col_name}'")),
-                    ).otherwise(
-                        F.concat(F.lit("'"), rep, F.lit("' cannot follow '"), prev_rep, F.lit(f"' in '{col_name}'"))
-                    )
-                )
-                rid = rule.get("id") or f"{self.manifest.id}/sequence/{col_name}"
+                msg = _message(rule, F.when(
+                    is_first,
+                    F.concat(F.lit("'"), rep, F.lit(f"' is not an allowed start value for '{col_name}'")),
+                ).otherwise(
+                    F.concat(F.lit("'"), rep, F.lit("' cannot follow '"), prev_rep, F.lit(f"' in '{col_name}'"))
+                ))
                 order = list(rule.params["order_by"])
                 structs.append(
                     F.when(
                         bad,
-                        F.struct(
-                            F.lit(rid).alias("schema_id"),
+                        _violation_element(
+                            F.lit(rule.schema_id(self.manifest.id, col_name)),
                             F.array(
                                 *[F.col(c).cast("string") for c in part],
                                 *[F.col(c).cast("string") for c in order],
                                 F.lit(col_name),
-                            ).alias("absolute_path"),
-                            cur.cast("string").alias("failing_value"),
-                            msg.alias("message"),
+                            ),
+                            cur.cast("string"),
+                            msg,
                         ),
                     )
                 )
@@ -1554,52 +1485,31 @@ class ValidationEngine:
             if kind == "ordering":
                 bad = (col <= ref) if strictly else (col < ref)
                 word = "strictly increasing" if strictly else "non-decreasing"
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.concat(
-                        F.lit(f"'{col_name}' value "), col.cast("string"),
-                        F.lit(f" is not {word} (previous "), ref.cast("string"), F.lit(")"),
-                    )
+                msg = F.concat(
+                    F.lit(f"'{col_name}' value "), col.cast("string"),
+                    F.lit(f" is not {word} (previous "), ref.cast("string"), F.lit(")"),
                 )
-                rid = rule.get("id") or f"{self.manifest.id}/ordering/{col_name}"
             else:
                 bad = col != ref
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.concat(
-                        F.lit(f"'{col_name}' value "), col.cast("string"),
-                        F.lit(" breaks contiguity (expected "), ref.cast("string"), F.lit(")"),
-                    )
+                msg = F.concat(
+                    F.lit(f"'{col_name}' value "), col.cast("string"),
+                    F.lit(" breaks contiguity (expected "), ref.cast("string"), F.lit(")"),
                 )
-                rid = rule.get("id") or f"{self.manifest.id}/contiguous/{col_name}"
             structs.append(
                 F.when(
                     F.coalesce(bad, F.lit(False)),
-                    F.struct(
-                        F.lit(rid).alias("schema_id"),
-                        self._path(key_path, col_name).alias("absolute_path"),
-                        col.cast("string").alias("failing_value"),
-                        msg.alias("message"),
+                    _violation_element(
+                        F.lit(rule.schema_id(self.manifest.id, col_name)),
+                        self._path(key_path, col_name),
+                        col.cast("string"),
+                        _message(rule, msg),
                     ),
                 )
             )
         exploded = base.select(
             "instance_name", F.explode(F.array_compact(F.array(*structs))).alias("v")
         )
-        return exploded.select(
-            F.col("v.schema_id").alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.col("v.absolute_path").alias("absolute_path"),
-            F.col("v.failing_value").alias("failing_value"),
-            F.col("v.message").alias("message"),
-        )
+        return self._rows(exploded, F.col("instance_name"), *(F.col(f"v.{f}") for f in _ELEMENT_FIELDS))
 
     def _salted_group(self, df: DataFrame, rule: Rule, group: list[str], specs: list) -> DataFrame:
         """Two-phase salted aggregation for hot-key skew (north_rule):
@@ -1630,7 +1540,6 @@ class ValidationEngine:
 
     def _aggregate_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
         group = rule.get("group_by", ["conv_id"])
-        rid = rule.get("id") or f"{self.manifest.id}/aggregate/{'+'.join(group)}"
         right_spec = rule.params["right"]
         # Both sides compile into ONE agg() — no second scan (SURVEY.md §4.2 #4,
         # rhs-as-expression parity with check_interfaces_ipv4.py:30-38).
@@ -1650,29 +1559,22 @@ class ValidationEngine:
             grouped = df.groupBy(*group).agg(*aggs)
         right = F.col("_right") if isinstance(right_spec, dict) else F.lit(right_spec)
         failing = grouped.filter(~F.coalesce(_comparison(rule.params["operator"], F.col("_left"), right), F.lit(False)))
-        msg = rule.get("message")
         # coalesce the interpolated sides: a NULL aggregate (e.g. sum over an
         # empty filter) must not null-propagate through concat and erase the
         # whole diagnostic
         left_str = F.coalesce(F.col("_left").cast("string"), F.lit("NULL"))
         right_str = F.coalesce(right.cast("string"), F.lit("NULL"))
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit(f"aggregate check failed: left="), left_str,
-                F.lit(f" {rule.params['operator']} right="), right_str, F.lit(" is false"),
-            )
-        )
-        return failing.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("_inst").alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(g).cast("string") for g in group]).alias("absolute_path"),
-            left_str.alias("failing_value"),
-            message.alias("message"),
+        message = _message(rule, F.concat(
+            F.lit(f"aggregate check failed: left="), left_str,
+            F.lit(f" {rule.params['operator']} right="), right_str, F.lit(" is false"),
+        ))
+        return self._rows(
+            failing,
+            F.col("_inst"),
+            F.lit(rule.schema_id(self.manifest.id, "+".join(group))),
+            F.array(*[F.col(g).cast("string") for g in group]),
+            left_str,
+            message,
         )
 
     def _strict_violations(self, df: DataFrame, rule: Rule | None) -> DataFrame | None:
@@ -1716,16 +1618,18 @@ class ValidationEngine:
         extras = sorted(actual - declared)
         if not extras:
             return None
-        spark = df.sparkSession
         rid = (rule.get("id") if rule else None) or f"{self.manifest.id}/strict_columns"
-        rows = [
-            (
-                rid, "FAIL", "table", self.manifest.table, "TABLE",
-                [*path_prefix, c], c, f"Additional properties are not allowed ('{c}' was unexpected)",
-            )
-            for c in extras
-        ]
-        return spark.createDataFrame(rows, _VIOLATION_SCHEMA_DDL)
+        extra = F.col("extra")
+        return _violation_rows(
+            df.sparkSession.createDataFrame([(c,) for c in extras], ["extra"]),
+            F.lit("table"),
+            F.lit(rid),
+            F.array(*[F.lit(p) for p in path_prefix], extra),
+            extra,
+            F.concat(F.lit("Additional properties are not allowed ('"), extra, F.lit("' was unexpected)")),
+            self.manifest.table,
+            "TABLE",
+        )
 
     # -- orchestration -----------------------------------------------------
 
@@ -1736,7 +1640,7 @@ class ValidationEngine:
         if (rv := self.row_violations(df)) is not None:
             parts.insert(0, rv)
         if not parts:
-            return df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL)
+            return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
         return reduce(lambda a, b: a.unionByName(b), parts)
 
     def _table_violations(self, df: DataFrame, ref_tables: dict[str, DataFrame]) -> list[DataFrame]:
@@ -1844,8 +1748,8 @@ class ValidationEngine:
                 F.lit(self.manifest.id).alias("schema_id"),
                 F.col("instance_name"),
                 F.col("grain"),
-                F.when(F.coalesce(F.col("n_violations"), F.lit(0)) > 0, F.lit("FAIL"))
-                .otherwise(F.lit("PASS"))
+                F.when(F.coalesce(F.col("n_violations"), F.lit(0)) > 0, "FAIL")
+                .otherwise("PASS")
                 .alias("result"),
                 F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations"),
             )
@@ -1865,11 +1769,8 @@ def _tag_element(inst: Column, mid: str, loc: str, itype: str):
     # PySpark HOF lambdas must be single-arg closures (no default args —
     # CLAUDE.md), so the per-engine constants ride a factory closure
     def _tag(v: Column) -> Column:
-        return F.struct(
-            v["schema_id"].alias("schema_id"),
-            v["absolute_path"].alias("absolute_path"),
-            v["failing_value"].alias("failing_value"),
-            v["message"].alias("message"),
+        return _violation_element(
+            *(v[f] for f in _ELEMENT_FIELDS),
             inst.alias("instance_name"),
             F.lit(loc).alias("instance_location"),
             F.lit(itype).alias("instance_type"),
@@ -1939,7 +1840,7 @@ def validate_many(
                 )
         if tagged:
             combined = tagged[0] if len(tagged) == 1 else F.concat(*tagged)
-            parts.append(
+            exploded = (
                 df.select(combined.alias("_v"))
                 # explode_outer + null filter, not explode: same
                 # InferFiltersFromGenerate duplicate-evaluation defense as
@@ -1949,16 +1850,15 @@ def validate_many(
                 # multiset is unchanged.
                 .select(F.explode_outer("_v").alias("v"))
                 .filter(F.col("v").isNotNull())
-                .select(
-                    F.col("v.schema_id").alias("schema_id"),
-                    F.lit("FAIL").alias("result"),
-                    F.col("v.instance_name").alias("instance_name"),
-                    F.col("v.instance_location").alias("instance_location"),
-                    F.col("v.instance_type").alias("instance_type"),
-                    F.col("v.absolute_path").alias("absolute_path"),
-                    F.col("v.failing_value").alias("failing_value"),
-                    F.col("v.message").alias("message"),
-                    F.col("v._mid").alias("_mid"),
+            )
+            parts.append(
+                _violation_rows(
+                    exploded,
+                    F.col("v.instance_name"),
+                    *(F.col(f"v.{f}") for f in _ELEMENT_FIELDS),
+                    F.col("v.instance_location"),
+                    F.col("v.instance_type"),
+                    _mid=F.col("v._mid"),
                 )
             )
     for e in engines:
@@ -1968,7 +1868,7 @@ def validate_many(
             )
     if not parts:
         parts.append(
-            df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL).withColumn(
+            df.sparkSession.createDataFrame([], VIOLATION_SCHEMA).withColumn(
                 "_mid", F.lit(None).cast("string")
             )
         )

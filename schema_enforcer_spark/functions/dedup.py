@@ -348,12 +348,14 @@ def minhash_lsh_candidates(
     )
 
 
-def jaccard(a: Column, b: Column) -> Column:
+def _jaccard_distinct(a: Column, b: Column) -> Column:
     """Set Jaccard of two DISTINCT-element arrays. Precondition (held by
     every caller — shingle sets are array_distinct by construction):
     elements are unique, so |union| = |a| + |b| - |inter| and the second
     per-pair set build (array_union) is pure arithmetic — one hash-set
-    pass per pair instead of two (r7, verified identical output)."""
+    pass per pair instead of two (r7, verified identical output). Private:
+    on arrays with repeated elements the arithmetic union is wrong (the
+    result can exceed 1)."""
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(1.0))
@@ -387,7 +389,7 @@ def minhash_near_dups(
     verified = (
         cands.join(sh.withColumnsRenamed({"_id": "a_id", "_sh": "_sha"}), "a_id")
         .join(sh.withColumnsRenamed({"_id": "b_id", "_sh": "_shb"}), "b_id")
-        .select("a_id", "b_id", F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"))
+        .select("a_id", "b_id", F.round(_jaccard_distinct(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
     return verified
@@ -403,7 +405,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         .select(
             F.col("a._id").alias("a_id"),
             F.col("b._id").alias("b_id"),
-            F.round(jaccard(F.col("a._sh"), F.col("b._sh")), 6).alias("jaccard"),
+            F.round(_jaccard_distinct(F.col("a._sh"), F.col("b._sh")), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -499,7 +501,7 @@ def match_against_index(
         .select(
             "new_id",
             "corpus_id",
-            F.round(jaccard(F.col("_shn"), F.col("_shc")), 6).alias("jaccard"),
+            F.round(_jaccard_distinct(F.col("_shn"), F.col("_shc")), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

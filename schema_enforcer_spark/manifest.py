@@ -329,6 +329,11 @@ class Rule:
     def get(self, name: str, default: Any = None) -> Any:
         return self.params.get(name, default)
 
+    def schema_id(self, manifest_id: str, key: str) -> str:
+        """The violation ``schema_id``: the rule's declared ``id``, else
+        ``<manifest id>/<kind>/<key>``."""
+        return self.params.get("id") or f"{manifest_id}/{self.kind}/{key}"
+
     @property
     def is_row_rule(self) -> bool:
         return self.kind in ROW_RULE_KINDS

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from schema_enforcer_spark.engine import VIOLATION_COLUMNS  # noqa: F401  (re-export convenience)
+from schema_enforcer_spark.engine import VIOLATION_COLUMNS, _violation_rows  # noqa: F401  (VIOLATION_COLUMNS: re-export convenience)
 
 _OUT_COLS = ["keys", "column", "failing_value", "message"]
 _OUT_DDL = "keys array<string>, column string, failing_value string, message string"
@@ -140,15 +140,15 @@ def run_validator(
         if instance_expr
         else F.pmod(F.hash(anchor), F.lit(num_buckets)).cast("string")
     )
-    return raw.select(
-        F.lit(validator.schema_id).alias("schema_id"),
-        F.lit("FAIL").alias("result"),
-        inst.alias("instance_name"),
-        F.lit(table).alias("instance_location"),
-        F.lit("PARTITION").alias("instance_type"),
-        F.col("keys").alias("absolute_path"),
+    return _violation_rows(
+        raw,
+        inst,
+        F.lit(validator.schema_id),
+        F.col("keys"),
         F.col("failing_value"),
         F.col("message"),
+        table,
+        "PARTITION",
     )
 
 

@@ -23,7 +23,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from schema_enforcer_spark.engine import VIOLATION_SCHEMA, _violation_rows
 
 
 def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -404,20 +405,6 @@ def psi(p_counts: list[int], q_counts: list[int]) -> float:
     return sum((a - b) * math.log(a / b) for a, b in zip(p, q))
 
 
-_DRIFT_SCHEMA = T.StructType(
-    [
-        T.StructField("schema_id", T.StringType()),
-        T.StructField("result", T.StringType()),
-        T.StructField("instance_name", T.StringType()),
-        T.StructField("instance_location", T.StringType()),
-        T.StructField("instance_type", T.StringType()),
-        T.StructField("absolute_path", T.ArrayType(T.StringType())),
-        T.StructField("failing_value", T.StringType()),
-        T.StructField("message", T.StringType()),
-    ]
-)
-
-
 # ---------------------------------------------------------------------------
 # Stored drift baselines (the --write-baseline/--baseline CLI lifecycle):
 # one JSON file under the checkpoint dir mapping rule id → the
@@ -435,7 +422,7 @@ def baseline_store_path(checkpoint_dir: str) -> str:
 
 def drift_rule_id(manifest, rule) -> str:
     """The baseline-store key — identical to the violation schema_id."""
-    return rule.get("id") or f"{manifest.id}/drift/{rule.params['column']}"
+    return rule.schema_id(manifest.id, rule.params["column"])
 
 
 def write_drift_baselines(spark, df: DataFrame, manifest, path: str) -> dict[str, dict]:
@@ -515,14 +502,18 @@ def drift_violations(engine, df: DataFrame, rule) -> DataFrame:
     cur = compute_histogram(df, expr, float(base["lo"]), float(base["hi"]), int(base["bins"]))
     stat = ks_statistic(base["counts"], cur["counts"]) if metric == "ks" else psi(base["counts"], cur["counts"])
     spark = df.sparkSession
-    rid = rid_key
     if stat <= threshold:
-        return spark.createDataFrame([], _DRIFT_SCHEMA)
+        return spark.createDataFrame([], VIOLATION_SCHEMA)
     msg = rule.get("message") or (
         f"distribution drift on {expr}: {metric}={stat:.6f} exceeds threshold {threshold}"
     )
-    row = (
-        rid, "FAIL", "table", engine.manifest.table, "TABLE",
-        [expr], f"{stat:.6f}", msg,
+    return _violation_rows(
+        spark.createDataFrame([(f"{stat:.6f}",)], ["stat"]),
+        F.lit("table"),
+        F.lit(rid_key),
+        F.array(F.lit(expr)),
+        F.col("stat"),
+        F.lit(msg),
+        engine.manifest.table,
+        "TABLE",
     )
-    return spark.createDataFrame([row], _DRIFT_SCHEMA)

@@ -65,7 +65,7 @@ def stream_verdicts(
             F.lit(manifest.id).alias("schema_id"),
             F.col("win.start").alias("window_start"),
             F.col("instance_name"),
-            F.when(F.col("n_violations") > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("result"),
+            F.when(F.col("n_violations") > 0, "FAIL").otherwise("PASS").alias("result"),
             "n_rows",
             "n_violations",
         )
@@ -265,7 +265,6 @@ def stream_equals_table(
                 f"equals_table: column {c!r} dtype mismatch — input is {lt}, "
                 f"{ref_name} is {rt}; cast the tables to agree before validating"
             )
-    rid = rule.get("id") or f"{manifest.id}/equals_table/{ref_name}"
     left = stream_df.select(
         *keys, *comp, eng._instance_col(stream_df).alias("_inst"), F.lit(1).alias("_l")
     )
@@ -273,9 +272,7 @@ def stream_equals_table(
         *keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r")
     )
     j = left.join(right, on=keys, how="left_outer")
-    return eng._equals_table_emit(
-        j, stream_df, ref, keys, comp, ref_name, rid, rule.get("message")
-    )
+    return eng._equals_table_emit(j, stream_df, ref, keys, comp, rule)
 
 
 def stream_outlier(
@@ -317,7 +314,7 @@ def stream_outlier(
     eng = ValidationEngine(manifest, **engine_kw)
     parts = []
     for rule in rules:
-        rid = rule.get("id") or f"{manifest.id}/outlier/{rule.params['column']}"
+        rid = rule.schema_id(manifest.id, rule.params["column"])
         b = (bounds or {}).get(rid)
         if b is None:
             b = eng.outlier_bounds(reference_df, rule)

@@ -12,6 +12,15 @@ from schema_enforcer_spark.engine import ValidationEngine
 from schema_enforcer_spark.manifest import Manifest, Rule
 
 
+def _run(cm, df, eng):
+    """One checkpointed run the way the CLI drives it: validate the pending
+    partitions, then record their lineage."""
+    rep, n = cm.run(df, eng)
+    if rep is not None:
+        cm.record(cm.last_pending, eng, rep)
+    return rep, n
+
+
 def _m(values):
     return Manifest(
         id="schemas/ckpt",
@@ -39,9 +48,9 @@ def test_resume_skips_validated_partitions(spark, transcripts):
         assert pend_insts == set(insts) - set(half)
 
         # full resumed run completes the table, second run is a no-op
-        rep2, n2 = cm.run(transcripts, eng)
+        rep2, n2 = _run(cm, transcripts, eng)
         assert rep2 is not None and n2 > 0
-        rep3, n3 = cm.run(transcripts, eng)
+        rep3, n3 = _run(cm, transcripts, eng)
         assert rep3 is None and n3 == 0
 
         # lineage covers every partition exactly once
@@ -54,7 +63,7 @@ def test_changed_manifest_invalidates_lineage(spark, transcripts):
     with tempfile.TemporaryDirectory() as tmp:
         cm = CheckpointManager(spark, f"{tmp}/lineage")
         eng1 = ValidationEngine(_m(["system", "user", "assistant", "tool"]))
-        rep, n = cm.run(transcripts, eng1)
+        rep, n = _run(cm, transcripts, eng1)
         assert n > 0
         # same data, different rule set → everything pending again
         eng2 = ValidationEngine(_m(["system", "user"]))
@@ -73,7 +82,7 @@ def test_failed_partitions_revalidate_on_resume(spark, transcripts):
     eng = ValidationEngine(_m(["system", "user", "assistant", "tool"]))
     with tempfile.TemporaryDirectory() as tmp:
         cm = CheckpointManager(spark, f"{tmp}/lineage")
-        rep1, n1 = cm.run(df, eng)
+        rep1, n1 = _run(cm, df, eng)
         assert rep1 is not None and not rep1.passes()
         failed = {r["partition_id"] for r in cm.lineage().filter("verdict='FAIL'").collect()}
         assert failed, "fixture must produce at least one FAILed partition"
@@ -83,7 +92,7 @@ def test_failed_partitions_revalidate_on_resume(spark, transcripts):
             r[0] for r in cm.pending(df, eng).select(eng._instance_col(df)).distinct().collect()
         }
         assert pend_insts == failed
-        rep2, n2 = cm.run(df, eng)
+        rep2, n2 = _run(cm, df, eng)
         assert rep2 is not None and n2 > 0 and not rep2.passes()
 
 
@@ -91,7 +100,7 @@ def test_verify_counts_revalidates_changed_partitions(spark, transcripts):
     eng = ValidationEngine(_m(["system", "user", "assistant", "tool"]))
     with tempfile.TemporaryDirectory() as tmp:
         cm = CheckpointManager(spark, f"{tmp}/lineage")
-        rep, _ = cm.run(transcripts, eng)
+        rep, _ = _run(cm, transcripts, eng)
         assert rep is not None and rep.passes()
         assert cm.pending(transcripts, eng, verify_counts=True).count() == 0
 
@@ -117,10 +126,10 @@ def test_table_grain_fail_forces_revalidation(spark, transcripts):
     bad = transcripts.withColumn("rogue_col", transcripts["turn_idx"])
     with tempfile.TemporaryDirectory() as tmp:
         cm = CheckpointManager(spark, f"{tmp}/lineage")
-        rep1, _ = cm.run(bad, eng)
+        rep1, _ = _run(cm, bad, eng)
         assert rep1 is not None and not rep1.passes()
         # resume on the same bad data: the table FAIL forces full re-validation
-        rep2, n2 = cm.run(bad, eng)
+        rep2, n2 = _run(cm, bad, eng)
         assert rep2 is not None and n2 > 0 and not rep2.passes()
 
 
@@ -137,13 +146,13 @@ def test_table_grain_fail_clears_after_fix(spark, transcripts):
     bad = transcripts.withColumn("rogue_col", transcripts["turn_idx"])
     with tempfile.TemporaryDirectory() as tmp:
         cm = CheckpointManager(spark, f"{tmp}/lineage")
-        rep1, _ = cm.run(bad, eng)
+        rep1, _ = _run(cm, bad, eng)
         assert rep1 is not None and not rep1.passes()
         # data fixed: clean run passes AND records the 'table' PASS
-        rep2, n2 = cm.run(transcripts, eng)
+        rep2, n2 = _run(cm, transcripts, eng)
         assert rep2 is not None and rep2.passes()
         assert not cm.table_grain_failed(eng.manifest.rule_set_hash())
-        rep3, n3 = cm.run(transcripts, eng)
+        rep3, n3 = _run(cm, transcripts, eng)
         assert rep3 is None and n3 == 0, "fixed table-grain FAIL must clear"
 
 
@@ -157,7 +166,7 @@ def test_latest_verdict_wins_for_completion(spark, transcripts):
     eng = ValidationEngine(_m(["system", "user", "assistant", "tool"]))
     with tempfile.TemporaryDirectory() as tmp:
         cm = CheckpointManager(spark, f"{tmp}/lineage")
-        rep, _ = cm.run(transcripts, eng)  # all PASS recorded
+        rep, _ = _run(cm, transcripts, eng)  # all PASS recorded
         assert rep is not None and rep.passes()
         _time.sleep(1.1)  # distinct validated_at
         bad = inject(transcripts, "invalid_enum")
@@ -169,3 +178,40 @@ def test_latest_verdict_wins_for_completion(spark, transcripts):
             r[0] for r in cm.pending(bad, eng).select(eng._instance_col(bad)).distinct().collect()
         }
         assert failed and failed <= pend_insts, "newest-FAIL partitions must be pending"
+
+
+def test_run_records_nothing(spark, transcripts):
+    """run() only validates: lineage gains rows when the caller records."""
+    eng = ValidationEngine(_m(["system", "user", "assistant", "tool"]))
+    with tempfile.TemporaryDirectory() as tmp:
+        cm = CheckpointManager(spark, f"{tmp}/lineage")
+        rep, n = cm.run(transcripts, eng)
+        assert rep is not None and n == transcripts.count()
+        assert cm.lineage().count() == 0
+        cm.record(cm.last_pending, eng, rep)
+        assert cm.pending(transcripts, eng).count() == 0
+
+
+def test_table_grain_tie_broken_by_run_ns(spark):
+    """Two 'table' lineage rows sharing validated_at: the one with the
+    larger run_ns is the newest, as in completed_partitions."""
+    import datetime
+
+    from schema_enforcer_spark.checkpoint import LINEAGE_SCHEMA_DDL
+
+    at = datetime.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [
+        ("table", "h", "schemas/t", "FAIL", 0, 1, None, at, 1),
+        ("table", "h", "schemas/t", "PASS", 0, 0, None, at, 2),
+    ]
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/lineage"
+        spark.createDataFrame(rows, LINEAGE_SCHEMA_DDL).write.parquet(path)
+        cm = CheckpointManager(spark, path)
+        assert not cm.table_grain_failed("h")
+        # and the reverse order reads as failed
+        spark.createDataFrame(
+            [("table", "h", "schemas/t", "FAIL", 0, 1, None, at, 3)], LINEAGE_SCHEMA_DDL
+        ).write.mode("append").parquet(path)
+        assert cm.table_grain_failed("h")
+        assert not cm.table_grain_failed("other-hash")

@@ -540,6 +540,117 @@ def test_cli_stats_columns_requires_checkpoint(spark, data, capsys):
     assert "--stats-columns requires --checkpoint" in capsys.readouterr().err
 
 
+def test_cli_bad_stats_columns_rejected_before_any_write(spark, data, tmp_path, capsys):
+    """A missing --stats-columns name exits 2 before validation: no lineage
+    row may claim partitions whose stats were never written."""
+    ckpt = str(tmp_path / "ckpt")
+    rc = main(["--manifest", MANIFEST, "--input", data["bad"], "--checkpoint", ckpt,
+               "--output", str(tmp_path / "out"), "--stats-columns", "role,nope"])
+    assert rc == 2
+    assert "--stats-columns not in the input: ['nope']" in capsys.readouterr().err
+    assert not os.path.exists(ckpt) and not os.path.exists(tmp_path / "out")
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _ckpt_run(data, root):
+    return main([
+        "--manifest", MANIFEST, "--input", data["bad"], "--checkpoint", f"{root}/ckpt",
+        "--output", f"{root}/out", "--stats-columns", "conv_id,role",
+    ])
+
+
+def _end_state(spark, root):
+    """(violations multiset, verdicts, newest lineage row per partition,
+    merged stats) of one checkpointed --output --stats-columns run."""
+    from pyspark.sql import functions as F
+
+    from schema_enforcer_spark.stats import merged_column_stats
+
+    def rows(df):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+        )
+
+    violations = spark.read.parquet(f"{root}/out/violations")
+    verdicts = spark.read.parquet(f"{root}/out/verdicts")
+    newest = (
+        spark.read.parquet(f"{root}/ckpt")
+        .groupBy("partition_id")
+        .agg(F.max_by(F.struct("schema_id", "rule_set_hash", "verdict", "n_rows", "n_violations"),
+                      F.struct("validated_at", "run_ns")).alias("r"))
+        .select("partition_id", "r.*")
+    )
+    stats = merged_column_stats(spark, f"{root}/ckpt/_column_stats")
+    return (
+        rows(violations.select(*sorted(violations.columns))),
+        rows(verdicts.select(*sorted(verdicts.columns))),
+        rows(newest),
+        rows(stats.select(*sorted(stats.columns))),
+    )
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, data, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("uninterrupted"))
+    assert _ckpt_run(data, root) == 1
+    return _end_state(spark, root)
+
+
+@pytest.mark.parametrize("point", ["first_sink_write", "second_sink_write", "record", "write_stats"])
+def test_cli_resume_after_crash_is_exact(spark, data, tmp_path, monkeypatch, uninterrupted, point):
+    """A checkpointed --output --stats-columns run dies at one point of its
+    write sequence; the resumed run must end in the same sink, lineage and
+    merged stats as a run that was never interrupted."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from schema_enforcer_spark import stats
+    from schema_enforcer_spark.checkpoint import CheckpointManager
+
+    def crash(*args, **kwargs):
+        raise _Crash(point)
+
+    # the crashed run never releases its caches; a cached plan over the
+    # lineage would otherwise serve the resumed run stale pending rows
+    persisted, real_persist = [], DataFrame.persist
+
+    def persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", persist)
+
+    if point.endswith("sink_write"):
+        # 1st parquet write: the violations append, right after the
+        # instance-dir deletes; 2nd: the verdicts append
+        fail_at = 1 if point == "first_sink_write" else 2
+        real, calls = DataFrameWriter.parquet, []
+
+        def parquet(self, *args, **kwargs):
+            calls.append(1)
+            if len(calls) == fail_at:
+                crash()
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    elif point == "record":
+        monkeypatch.setattr(CheckpointManager, "record", crash)
+    else:
+        monkeypatch.setattr(stats, "write_partition_stats", crash)
+
+    root = str(tmp_path)
+    with pytest.raises(_Crash):
+        _ckpt_run(data, root)
+    monkeypatch.undo()
+    for frame in persisted:
+        frame.unpersist()
+    assert _ckpt_run(data, root) == 1
+    assert _end_state(spark, root) == uninterrupted
+
+
 def test_cli_sample_fraction_deterministic_audit(spark, data, capsys):
     """--sample-fraction: validates a deterministic md5-bucket subset —
     same rows every run, fewer than the full table, and clean data still
